@@ -223,14 +223,17 @@ object CurationPipeline {
       case "dedup_minhash" =>
         // MinHash LSH near-dup with the transitive-closure keep policy
         // (lowest id, or quality argmax when quality_col is given). NOTE:
-        // like dedup_against_reference, cluster propagation runs Spark jobs
-        // at PIPELINE-CONSTRUCTION time (connected components iterate).
-        val pairs = Dedup.minHashDuplicatePairs(df, idCol, textCol,
+        // like dedup_against_reference, this step runs Spark jobs at
+        // PIPELINE-CONSTRUCTION time: ONE pass over the step input
+        // materializes the (id, shingle-hash) sketch, then small jobs over
+        // that sketch build the verified pairs and iterate connected
+        // components. The returned plan reads the input again only in the
+        // keep joins, next to the one cluster checkpoint left cached.
+        val clusters = Dedup.minHashClusters(df, idCol, textCol,
           shingleSize = num(m, "shingle_size").getOrElse(3.0).toInt,
           numHashes = num(m, "num_hashes").getOrElse(64.0).toInt,
           bands = num(m, "bands").getOrElse(16.0).toInt,
           threshold = num(m, "threshold").getOrElse(0.8))
-        val clusters = Dedup.duplicateClusters(pairs)
         str(m, "quality_col") match {
           case Some(q) => Dedup.dedupByClustersKeepBest(df, idCol, col(q), clusters)
           case None => Dedup.dedupByClusters(df, idCol, clusters)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftObservationBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -183,6 +183,12 @@ object Dedup {
     * shingle frame for exact verification. At 100 TB the all-pairs space never
     * materializes; cost is O(docs x bands) join keys + O(candidates) arrays.
     *
+    * Lazy: the returned plan references the `(__id, __hsh)` sketch of `df`
+    * four times (both band-join sides and both verification join-backs), and
+    * an action recomputes `df` for every reference whose exchange Spark does
+    * not reuse. The `dedup_minhash` curation step runs the same pair logic
+    * over a sketch materialized once instead (see [[minHashClusters]]).
+    *
     * NULL-text semantics (intentional): docs with NULL text produce no shingle
     * sketch and therefore emit no band rows — they never appear in the pair
     * output, neither with each other nor with empty-text docs. (Pre-r5
@@ -195,17 +201,26 @@ object Dedup {
                             bands: Int = 16, threshold: Double = 0.8): DataFrame = {
     PipelineGuards.requireBatch(df, "minHashDuplicatePairs")
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val (sh, banded) = shingleBands(df, col(idCol), col(textCol), shingleSize, numHashes, bands)
-    val l = banded.select(col("__id").as("id_a"), col("__band"), col("__bandhash"))
-    val r = banded.select(col("__id").as("id_b"), col("__band"), col("__bandhash"))
-    val candidateIds = l.join(r, Seq("__band", "__bandhash"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    val candidates = candidateIds
-      .join(sh.select(col("__id").as("id_a"), col("__hsh").as("__sh_a")), Seq("id_a"))
-      .join(sh.select(col("__id").as("id_b"), col("__hsh").as("__sh_b")), Seq("id_b"))
-    verifyJaccard(candidates, threshold)
+    sketchPairs(shingleSketch(df, col(idCol), col(textCol), shingleSize),
+      numHashes, bands, threshold)
+  }
+
+  /** Near-dup clusters of `df` for the eager `dedup_minhash` curation step:
+    * the `(__id, __hsh)` sketch is materialized in ONE pass over `df`, the
+    * band rows, candidate join and exact-Jaccard verification read that
+    * sketch, and [[duplicateClusters]] runs its small connected-components
+    * jobs over the verified pairs. The sketch is released as soon as the
+    * edge list is materialized. Same pairs, hence same clusters, as
+    * `duplicateClusters(minHashDuplicatePairs(...))`.
+    */
+  private[pipeline] def minHashClusters(df: DataFrame, idCol: String, textCol: String,
+                                        shingleSize: Int, numHashes: Int,
+                                        bands: Int, threshold: Double): DataFrame = {
+    PipelineGuards.requireBatch(df, "dedup_minhash")
+    require(numHashes % bands == 0, "numHashes must be divisible by bands")
+    val sketch = shingleSketch(df, col(idCol), col(textCol), shingleSize).localCheckpoint()
+    clusters(sketchPairs(sketch, numHashes, bands, threshold), "id_a", "id_b",
+      maxIterations = 20, afterEdges = () => release(sketch))
   }
 
   /** n-gram Jaccard near-dup: same machinery, exposed with jaccard semantics
@@ -216,24 +231,45 @@ object Dedup {
     minHashDuplicatePairs(df, idCol, textCol, shingleSize = n,
       numHashes = 128, bands = 32, threshold = threshold)
 
-  /** Shared LSH scaffolding: (shingle frame `(__id, __hsh)`, band frame
-    * `(__id, __band, __bandhash)`). Exact Jaccard downstream is computed over
+  /** Shingle sketch `(__id, __hsh)`. Exact Jaccard downstream is computed over
     * the HASHED shingle sets (array<long>): set identity is preserved (64-bit
     * collisions are negligible) and long intersection is far cheaper than
-    * string intersection. The generator computes the full sketch ONCE per row
-    * and emits band rows.
+    * string intersection.
     */
-  private def shingleBands(df: DataFrame, id: Column, text: Column,
-                           shingleSize: Int, numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
+  private def shingleSketch(df: DataFrame, id: Column, text: Column, shingleSize: Int): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge
-    val sh = df.select(id.as("__id"),
+    df.select(id.as("__id"),
       GraftColumnBridge.column(HashedShingles(
         GraftColumnBridge.expression(text), shingleSize)).as("__hsh"))
-    val banded = sh.select(col("__id"),
+  }
+
+  /** Band rows `(__id, __band, __bandhash)` of a sketch: the generator
+    * computes the full signature ONCE per row and emits one row per band.
+    */
+  private def sketchBands(sh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge
+    sh.select(col("__id"),
       GraftColumnBridge.column(MinHashBandsExplode(
         GraftColumnBridge.expression(col("__hsh")), numHashes, bands))
         .as(Seq("__band", "__bandhash")))
-    (sh, banded)
+  }
+
+  /** Verified in-corpus pairs of a sketch: band self-join, candidate dedup,
+    * join-back of both shingle sets, exact Jaccard.
+    */
+  private def sketchPairs(sh: DataFrame, numHashes: Int, bands: Int,
+                          threshold: Double): DataFrame = {
+    val banded = sketchBands(sh, numHashes, bands)
+    val l = banded.select(col("__id").as("id_a"), col("__band"), col("__bandhash"))
+    val r = banded.select(col("__id").as("id_b"), col("__band"), col("__bandhash"))
+    val candidateIds = l.join(r, Seq("__band", "__bandhash"))
+      .where(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+      .dropDuplicates("id_a", "id_b")
+    val candidates = candidateIds
+      .join(sh.select(col("__id").as("id_a"), col("__hsh").as("__sh_a")), Seq("id_a"))
+      .join(sh.select(col("__id").as("id_b"), col("__hsh").as("__sh_b")), Seq("id_b"))
+    verifyJaccard(candidates, threshold)
   }
 
   private def verifyJaccard(candidates: DataFrame, threshold: Double): DataFrame = {
@@ -254,21 +290,37 @@ object Dedup {
     *
     * Min-label propagation: each round joins the label frame to the
     * (symmetrized) edge list and takes the min over neighbors — one join +
-    * one aggregation per round, O(component diameter) rounds. The label frame
-    * is localCheckpoint'ed every round to keep the plan linear (the standard
-    * Spark iterative-graph shape); near-dup components are shallow in
-    * practice (dup groups, not social graphs), so the default cap is generous.
-    * Convergence is checked on the materialized frame (no recompute).
+    * one aggregation per round, O(component diameter) rounds. The edge list
+    * is symmetrized from ONE reference to `pairs` and localCheckpoint'ed, so
+    * a lazy `pairs` plan is evaluated exactly once; every later job reads the
+    * small materialized edges and labels. The label frame is localCheckpoint'ed
+    * every round to keep the plan linear (the standard Spark iterative-graph
+    * shape); near-dup components are shallow in practice (dup groups, not
+    * social graphs), so the default cap is generous. Convergence is checked on
+    * the materialized frame (no recompute). On return the edge list and every
+    * superseded label checkpoint are released: only the checkpoint the
+    * returned frame reads stays cached.
     */
   def duplicateClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                        maxIterations: Int = 20): DataFrame = {
+                        maxIterations: Int = 20): DataFrame =
+    clusters(pairs, idA, idB, maxIterations, afterEdges = () => ())
+
+  /** [[duplicateClusters]] with a hook that runs once the edge list is
+    * materialized — the point from which `pairs` is never read again.
+    */
+  private def clusters(pairs: DataFrame, idA: String, idB: String,
+                       maxIterations: Int, afterEdges: () => Unit): DataFrame = {
     PipelineGuards.requireBatch(pairs, "duplicateClusters")
-    val e = pairs.select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst"))
-    val edges = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+    val (a, b) = (col(idA).cast("long"), col(idB).cast("long"))
+    val edges = pairs.select(explode(array(struct(a.as("src"), b.as("dst")),
+        struct(b.as("src"), a.as("dst")))).as("__e"))
+      .select(col("__e.src"), col("__e.dst"))
       .distinct().localCheckpoint()
+    afterEdges()
     var labels = edges.groupBy("src").agg(min("dst").as("__m"))
       .select(col("src").as("id"), least(col("src"), col("__m")).as("label"))
       .localCheckpoint()
+    var superseded = List(edges)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIterations) {
@@ -279,35 +331,41 @@ object Dedup {
       // next #6, guide §2 fewer jobs): an Observation collects the changed-
       // label count DURING the localCheckpoint materialization, so each
       // iteration runs ONE job instead of checkpoint + a separate isEmpty
-      // scan. Metrics arrive on an async listener; the bounded wait below
-      // degrades to the old isEmpty probe (over the materialized RDD) if
-      // they ever fail to land — never blocks, never changes the answer.
+      // scan. Metrics arrive on an async listener; the bounded wait on the
+      // observation's future degrades to the old isEmpty probe (over the
+      // materialized RDD) if they ever fail to land — never blocks, never
+      // changes the answer.
       val obs = new org.apache.spark.sql.Observation()
       val merged = labels.join(prop, Seq("id"), "left")
         .select(col("id"), col("label"),
           least(col("label"), coalesce(col("__nl"), col("label"))).as("__next"))
         .observe(obs, sum(when(col("__next") < col("label"), 1L).otherwise(0L)).as("changed"))
         .localCheckpoint()
-      def observedChanged: Option[Long] = {
-        import org.apache.spark.sql.GraftObservationBridge.{getOrEmpty => metricsOf}
-        var waitedMs = 0
-        var row = metricsOf(obs)
-        while (row.isEmpty && waitedMs < 2000) {
-          Thread.sleep(10); waitedMs += 10; row = metricsOf(obs)
-        }
-        row.get("changed").collect { case n: Long => n }
-      }
+      val observedChanged = GraftObservationBridge.await(obs, 2000)
+        .collect { case r if !r.isNullAt(0) => r.getLong(0) }
       converged = observedChanged match {
         case Some(n) => n == 0L
         case None => merged.where(col("__next") < col("label")).isEmpty
       }
+      superseded ::= labels
       labels = merged.select(col("id"), col("__next").as("label"))
       iter += 1
     }
+    superseded.foreach(release)
     if (!converged)
       System.err.println(s"duplicateClusters: not converged after $maxIterations rounds; " +
         "labels are consistent but some components may still be split — raise maxIterations")
     labels.select(col("id"), col("label").as("cluster"))
+  }
+
+  /** Frees the cached blocks of a `localCheckpoint`ed frame: unpersists the
+    * checkpointed RDD under every `LogicalRDD` leaf of its plan. Only for
+    * frames nothing reads any more — a later read of a released checkpoint
+    * fails.
+    */
+  private def release(checkpointed: DataFrame): Unit = checkpointed.queryExecution.logical.foreach {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
   }
 
   /** Keep one row per near-dup cluster (the min-id representative); rows that
@@ -742,7 +800,8 @@ object Dedup {
                         bands: Int = 16, persist: Boolean = true): NearDupIndex = {
     PipelineGuards.requireBatch(ref, "buildNearDupIndex (reference side)")
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val (sh, banded) = shingleBands(ref, col(refIdCol), col(refTextCol), shingleSize, numHashes, bands)
+    val sh = shingleSketch(ref, col(refIdCol), col(refTextCol), shingleSize)
+    val banded = sketchBands(sh, numHashes, bands)
     if (persist) NearDupIndex(sh.persist(), banded.persist(), shingleSize, numHashes, bands)
     else NearDupIndex(sh, banded, shingleSize, numHashes, bands)
   }
@@ -773,7 +832,8 @@ object Dedup {
                          shR: DataFrame, bandedR: DataFrame,
                          shingleSize: Int, numHashes: Int, bands: Int,
                          threshold: Double): DataFrame = {
-    val (shL, bandedL) = shingleBands(df, col(idCol), col(textCol), shingleSize, numHashes, bands)
+    val shL = shingleSketch(df, col(idCol), col(textCol), shingleSize)
+    val bandedL = sketchBands(shL, numHashes, bands)
     val candidateIds = bandedL.select(col("__id").as("id_a"), col("__band"), col("__bandhash"))
       .join(bandedR.select(col("__id").as("id_b"), col("__band"), col("__bandhash")),
         Seq("__band", "__bandhash"))

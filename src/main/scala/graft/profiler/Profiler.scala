@@ -118,10 +118,11 @@ object Profiler {
   def hasNoOutliersProfile(df: DataFrame, column: String,
                            opts: ProfilerOptions = ProfilerOptions()): Option[DQProfile] = {
     val base = df.where(col(column).isNotNull)
-    val medianRow = base.select(expr(s"approx_percentile($column, 0.5)").as("m")).first()
+    val medianRow = base.select(percentile_approx(col(column), lit(0.5), lit(10000)).as("m")).first()
     if (medianRow.isNullAt(0)) return None
     val med = medianRow.get(0).asInstanceOf[Number].doubleValue()
-    val madRow = base.select(expr(s"approx_percentile(abs($column - $med), 0.5)").as("mad")).first()
+    val madRow = base.select(
+      percentile_approx(abs(col(column) - lit(med)), lit(0.5), lit(10000)).as("mad")).first()
     val mad = if (madRow.isNullAt(0)) 0.0 else madRow.get(0).asInstanceOf[Number].doubleValue()
     val lo = med - opts.madFactor * mad
     val hi = med + opts.madFactor * mad

@@ -11,13 +11,15 @@ object GraftColumnBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }
 
-/** Bridge to Observation's package-private non-blocking read: `getOrEmpty`
-  * returns the observed metrics row if the action's listener has delivered
-  * it, else an empty map — the public `get` blocks forever if metrics never
+/** Bridge to Observation's package-private metrics future: `await` waits at
+  * most `timeoutMs` for the action's listener to deliver the observed metrics
+  * row, else returns None — the public `get` blocks forever if metrics never
   * land, which an engine loop must not risk.
   */
 object GraftObservationBridge {
-  def getOrEmpty(o: Observation): Map[String, Any] = o.getOrEmpty
+  def await(o: Observation, timeoutMs: Long): Option[Row] =
+    scala.util.Try(scala.concurrent.Await.result(o.future,
+      scala.concurrent.duration.Duration(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))).toOption
 }
 
 /** Bridge to the package-private internalCreateDataFrame — lets partition-local

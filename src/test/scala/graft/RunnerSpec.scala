@@ -221,6 +221,30 @@ class RunnerSpec extends SparkSpec {
     assert(stats("id")("count").asInstanceOf[Long] == 2000L)
   }
 
+  test("has_no_outliers profile: column names are never spliced into SQL text") {
+    val values = (1 to 1000).map(i => 100.0 + (i % 21)) ++ Seq.fill(5)(10000.0)
+    val spaced = values.zipWithIndex.map(_.swap).toDF("id", "my col")
+    val p = Profiler.hasNoOutliersProfile(spaced, "my col")
+    assert(p.map(_.column).contains("my col"))
+    // plain names keep the band the SQL-text approx_percentile formulation gave
+    def sqlBand(df: org.apache.spark.sql.DataFrame, c: String): String = {
+      val med = df.select(expr(s"approx_percentile($c, 0.5)")).first().get(0)
+        .asInstanceOf[Number].doubleValue()
+      val mad = df.select(expr(s"approx_percentile(abs($c - $med), 0.5)")).first().get(0)
+        .asInstanceOf[Number].doubleValue()
+      val f = graft.profiler.ProfilerOptions().madFactor
+      s"Lower boundary - ${med - f * mad}, upper boundary - ${med + f * mad}"
+    }
+    val dbl = values.zipWithIndex.map(_.swap).toDF("id", "v")
+    val ints = values.map(_.toInt).zipWithIndex.map(_.swap).toDF("id", "v")
+    for (df <- Seq(dbl, ints)) {
+      val got = Profiler.hasNoOutliersProfile(df, "v").map(_.description)
+      assert(got.exists(_.endsWith(sqlBand(df, "v"))), s"$got vs ${sqlBand(df, "v")}")
+    }
+    assert(Profiler.hasNoOutliersProfile(spaced, "my col").map(_.description)
+      .map(_.replace("my col", "v")) == Profiler.hasNoOutliersProfile(dbl, "v").map(_.description))
+  }
+
   test("has_no_outliers profile: emitted for clean columns, withheld when too many outliers") {
     // 1000 tight values + 5 extreme outliers (0.5% outliers, within 5% threshold)
     val clean = ((1 to 1000).map(i => 100.0 + (i % 21)) ++ Seq.fill(5)(10000.0))

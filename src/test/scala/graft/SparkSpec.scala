@@ -21,6 +21,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
+
+  /** `df` behind a deterministic always-true UDF filter that adds 1 to the
+    * returned accumulator for every row it evaluates — each action that scans
+    * the frame adds its row count, so the accumulator counts how many times
+    * the frame's rows were computed. The frame is re-rooted on an RDD so the
+    * optimizer cannot fold the filter into a local relation at plan time.
+    */
+  def evaluationCounted(df: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.util.LongAccumulator) = {
+    import org.apache.spark.sql.functions.{col, udf, xxhash64}
+    val acc = spark.sparkContext.longAccumulator("rows evaluated")
+    val tick = udf { (_: Long) => acc.add(1L); true }
+    val rooted = spark.createDataFrame(df.rdd, df.schema)
+    (rooted.where(tick(xxhash64(df.columns.map(col).toIndexedSeq: _*))), acc)
+  }
 }
 
 object SparkSpec {
